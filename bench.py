@@ -43,54 +43,22 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 
-def _persisted_rdd_ids(spark) -> set[int]:
-    """Ids of currently-persisted RDDs (localCheckpoint/cache blocks)."""
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in jmap.keySet().toArray()}
-    except Exception:  # noqa: BLE001 — introspection only, never fatal
-        return set()
-
-
-def _free_persisted_since(spark, before: set[int]) -> None:
-    """Synchronously unpersist every RDD persisted since ``before``.
-
-    Round-14 fix for the r13 in-suite inflation window (VERDICT r13
-    item 1): ``del df; gc.collect()`` only drops DRIVER refs and leaves
-    the actual block frees to the asynchronous ContextCleaner (py4j
-    finalizer → JVM GC → cleaner queue), so localCheckpoint blocks from
-    dozens of queries could pile up mid-suite and squeeze the unified
-    memory pool under the d_*/dq_* neighborhood. Explicitly
-    unpersisting the query's own blocks right after its timing is
-    deterministic and happens OUTSIDE the timed region. Cross-query
-    session state (``_materialized_fixture``, the Lloyd trainer cache)
-    lives in temp parquet, not persisted RDDs, so nothing freed here is
-    ever reused by a later query."""
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for e in jmap.entrySet().toArray():
-            if int(e.getKey()) not in before:
-                e.getValue().unpersist(False)
-    except Exception:  # noqa: BLE001 — cleanup must never fail a run
-        pass
-
-
 def _time_query(spark, fn, sf_dir: str, runs: int) -> float:
     import gc
 
+    from conduit_spark.plans import barrier_scope
+
     best = None
     for _ in range(runs):
-        persisted_before = _persisted_rdd_ids(spark)
-        t0 = time.monotonic()
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.monotonic() - t0
+        # the scope frees this run's checkpoint blocks when it exits,
+        # outside the timed region, so queries never evict each
+        # other's working set
+        with barrier_scope():
+            t0 = time.monotonic()
+            df = fn(spark, sf_dir)
+            df.write.format("noop").mode("overwrite").save()
+            dt = time.monotonic() - t0
         best = dt if best is None else min(best, dt)
-        # Free this run's checkpoint/cache blocks NOW (outside the
-        # timed region): the DataFrame ref drop + gc only queues the
-        # blocks for the async ContextCleaner, which let 50+ queries'
-        # blocks accumulate and evict each other's working set.
-        _free_persisted_since(spark, persisted_before)
         del df
         gc.collect()
     return best

@@ -20,52 +20,40 @@ SMALL_SORT_BYTES = 32 << 20
 
 
 def ordered_result(df: DataFrame, *cols: "Column | str") -> DataFrame:
-    """Final presentation sort with a materialization barrier.
+    """Final presentation sort over an eager :func:`~conduit_spark.plans.barrier`.
 
-    A bare ``orderBy`` on an expensive subtree executes it TWICE: the
-    range partitioner's sampling job runs the full child once to pick
-    split points, then the sort stage runs it again (measured 5.7s →
-    3.8s on the SemDeDup pair join at sf0.1). A ``localCheckpoint``
-    pins the subtree's result on first execution so the sort re-reads
+    A bare ``orderBy`` on an expensive subtree executes it twice: the
+    range partitioner's sampling job runs the full child to pick split
+    points, then the sort stage runs it again. The barrier pins the
+    subtree's result on first execution so the sort re-reads
     executor-local blocks.
 
-    r15 (VERDICT r14 item 3 — the per-query job floor): the checkpoint
-    is now EAGER, and when the materialized result is small (≤
-    ``SMALL_SORT_BYTES``, read from the block manager — no extra job)
-    the global sort becomes ``coalesce(1).sortWithinPartitions`` — ONE
-    narrow task over the checkpoint blocks, no range-sampling job, no
-    range exchange. Identical rows in the identical global order (a
-    single sorted partition IS a total order; tie order is as
-    undefined as the range sort's). Large results keep the
-    distributed range sort — the size gate is read per execution, so
-    the same code picks the scalable shape at cluster scale. Under a
-    plan audit (barriers suspended) the plain ``orderBy`` form is
-    built, as before.
+    When the materialized result is at most ``SMALL_SORT_BYTES`` (read
+    from the block manager, no extra job) the sort is
+    ``coalesce(1).sortWithinPartitions`` — one narrow task, no
+    range-sampling job, no range exchange, and the same rows in the
+    same total order. Larger results keep the distributed range sort;
+    the gate is read per execution, so the same code picks the
+    scalable shape at cluster scale. If the size cannot be read, the
+    range sort runs over the barrier (the query is not re-run). In
+    plan-audit mode (:func:`~conduit_spark.plans.barriers_disabled`)
+    the plain ``orderBy`` is built.
 
-    Scale note: the checkpointed relation is the query RESULT (already
-    reduced), not the input — output-sized executor memory, freed when
-    the DataFrame is GC'd. Use only as the outermost presentation step.
+    The barrier holds the query RESULT (already reduced), not its
+    input; use this only as the outermost presentation step.
     """
-    from conduit_spark.plans import barriers_suspended
+    from conduit_spark.plans import barrier, stored_bytes
 
-    if barriers_suspended():
+    chk = barrier(df)
+    if chk is df:  # plan-audit mode
         return df.orderBy(*cols)
     try:
-        jsc = df.sparkSession.sparkContext._jsc
-        before = {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
-        chk = df.localCheckpoint(eager=True)
-        new_ids = {
-            int(k) for k in jsc.getPersistentRDDs().keySet().toArray()
-        } - before
-        size = 0
-        for ri in jsc.sc().getRDDStorageInfo():
-            if int(ri.id()) in new_ids:
-                size += int(ri.memSize()) + int(ri.diskSize())
-        if new_ids and size <= SMALL_SORT_BYTES:
-            return chk.coalesce(1).sortWithinPartitions(*cols)
-        return chk.orderBy(*cols)
+        small = stored_bytes(chk) <= SMALL_SORT_BYTES
     except Exception:  # noqa: BLE001 — introspection must never break a query
-        return df.localCheckpoint(eager=False).orderBy(*cols)
+        return chk.orderBy(*cols)
+    if small:
+        return chk.coalesce(1).sortWithinPartitions(*cols)
+    return chk.orderBy(*cols)
 
 
 def tiny_loop_aqe_off(spark, n_rows: "int | None" = None, cap: int = 4_000_000):

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from conduit_spark.sources.tables import load_table
 from conduit_spark.analytics import ordered_result
+from conduit_spark.plans import barrier
 
 CHUNK_SIZE = 32  # tokens per chunk
 CHUNK_OVERLAP = 8  # tokens shared between consecutive chunks
@@ -102,7 +103,7 @@ def c_pack_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size(F.split(F.col("text"), " ")).cast("bigint").alias("n_tokens"),
         F.expr(f"doc_id div {PACK_BUCKET}").alias("bucket"),
-    ).localCheckpoint()  # feeds the bucket sums AND the join back
+    ).transform(barrier)  # feeds the bucket sums AND the join back
     from pyspark.sql import Window
 
     bsums = per_doc.groupBy("bucket").agg(F.sum("n_tokens").alias("bt"))
@@ -205,10 +206,10 @@ def c_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reference site
     per_doc = docs.select(
         "doc_id", F.expr(s_expr).alias("s")
-    ).localCheckpoint()  # feeds the chunk relation AND the stats join
+    ).transform(barrier)  # feeds the chunk relation AND the stats join
     rel = per_doc.select(
         "doc_id", F.explode(F.col("s.hashes")).alias("ch")
-    ).localCheckpoint()
+    ).transform(barrier)
     shared = (
         rel.groupBy("ch")
         .agg(F.count_distinct("doc_id").alias("nd"))

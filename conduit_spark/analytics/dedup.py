@@ -28,11 +28,12 @@ oracle.
 
 from __future__ import annotations
 
+import contextlib
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from conduit_spark.analytics import combination_pairs, ordered_result
-from conduit_spark.plans import iteration_barrier
 from conduit_spark.functions.hashing import (
     MINHASH_PRIME,
     md5_int32,
@@ -40,6 +41,7 @@ from conduit_spark.functions.hashing import (
     sql_md5_int32,
 )
 from conduit_spark.sources.tables import load_table
+from conduit_spark.plans import barrier, session_materialize
 
 SHINGLE_W = 3  # word-shingle width
 MINHASH_K = 12
@@ -208,13 +210,13 @@ def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint, not persist: CacheManager entries outlive the
     # query (the cur_boilerplate leak class, ADVICE r7) while
     # checkpoint blocks free with the DataFrame
-    garr = _doc_grams_df(docs).localCheckpoint()
+    garr = _doc_grams_df(docs).transform(barrier)
     sigs = garr.select("doc_id", *_sig_cols())
     # checkpoint the small (doc_id, band, bucket) relation so the
     # hot-bucket agg and both sides of the candidate self-join read the
     # materialization instead of re-running the signature pipeline
     # (self-referencing plans recompute, they don't reuse)
-    bb = _band_buckets(sigs).localCheckpoint()
+    bb = _band_buckets(sigs).transform(barrier)
     hot = (
         bb.groupBy("band", "bucket")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -279,18 +281,17 @@ def lsh_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle→signature→band→verify pipeline — 4 of the 5 slowest gate
     rows shared that one upstream (VERDICT r6 item 4). The pair
     relation is the 4096×-reduced OUTPUT of the pipeline (near-dup
-    rate × corpus, not corpus-sized), so it gets the
-    ``_materialized_fixture`` treatment: temp-parquet once, every
-    consumer reads the materialization. ``d_minhash_lsh_pairs`` stays
-    on the live pipeline — it is the timing anchor for the LSH build
-    itself. At 100 TB this is exactly the production shape too: a
+    rate × corpus, not corpus-sized), so it is session-materialized:
+    temp-parquet once, every consumer reads the materialization.
+    ``d_minhash_lsh_pairs`` stays on the live pipeline — it is the
+    timing anchor for the LSH build itself. At 100 TB this is exactly the production shape too: a
     curation DAG computes pairs once and fans out to
     cluster/rank/prune/audit consumers, rather than re-shingling the
     corpus per consumer."""
-    from conduit_spark.analytics.processor_queries import _materialized_fixture
+    from conduit_spark.analytics.processor_queries import _spread
 
-    return _materialized_fixture(
-        "lsh_pairs", spark, sf_dir, lambda: _lsh_pairs(spark, sf_dir)
+    return session_materialize(
+        "lsh_pairs", spark, sf_dir, lambda: _spread(_lsh_pairs(spark, sf_dir))
     )
 
 
@@ -311,45 +312,47 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     # materialize the (small) pair relation once — the symmetric union
     # below references it twice, and without this the upstream pair plan
     # (LSH candidate generation + verify) would evaluate twice
-    pairs = pairs.localCheckpoint()
+    pairs = pairs.transform(barrier)
     edges = pairs.union(
         pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
     ).persist()
-    # init = round 0 for free: every node's label starts at
-    # min(node, min neighbor) — one aggregation instead of a
-    # distinct + a full propagation round
-    labels = (
-        edges.groupBy(F.col("id_a").alias("node"))
-        .agg(F.min("id_b").alias("m"))
-        .select("node", F.least(F.col("node"), F.col("m")).alias("lbl"))
-        .localCheckpoint()
-    )
-    for _ in range(MAX_CC_ITERS):
-        nbr_min = (
-            edges.join(labels, edges.id_b == labels.node)
-            .groupBy(F.col("id_a").alias("node2"))
-            .agg(F.min("lbl").alias("nbr_lbl"))
+    try:
+        # init = round 0 for free: every node's label starts at
+        # min(node, min neighbor) — one aggregation instead of a
+        # distinct + a full propagation round
+        labels = (
+            edges.groupBy(F.col("id_a").alias("node"))
+            .agg(F.min("id_b").alias("m"))
+            .select("node", F.least(F.col("node"), F.col("m")).alias("lbl"))
+            .transform(barrier)
         )
-        cand = labels.join(nbr_min, labels.node == nbr_min.node2).select(
-            "node", "lbl", F.least(F.col("lbl"), F.col("nbr_lbl")).alias("cand")
-        )
-        # pointer jump (label-of-label): cand is itself a node id, so one
-        # self-join replaces it with cand's own (≤) label — convergence
-        # drops from O(diameter) to O(log diameter) rounds
-        lut = cand.select(F.col("node").alias("jn"), F.col("cand").alias("jl"))
-        upd = iteration_barrier(
-            cand.join(lut, cand.cand == lut.jn).select(
-                "node", "lbl", F.col("jl").alias("new_lbl")
+        for _ in range(MAX_CC_ITERS):
+            nbr_min = (
+                edges.join(labels, edges.id_b == labels.node)
+                .groupBy(F.col("id_a").alias("node2"))
+                .agg(F.min("lbl").alias("nbr_lbl"))
             )
-        )  # in-loop truncation: `cand` is referenced twice, so an
-        # unpinned tree doubles per round — exempt from the audit's
-        # barriers_disabled (plans.iteration_barrier docstring)
-        # count runs on the checkpointed frame — no recompute, no extra join
-        changed = upd.filter(F.col("new_lbl") != F.col("lbl")).count()
-        labels = upd.select("node", F.col("new_lbl").alias("lbl"))
-        if changed == 0:
-            break
-    edges.unpersist()
+            cand = labels.join(nbr_min, labels.node == nbr_min.node2).select(
+                "node", "lbl", F.least(F.col("lbl"), F.col("nbr_lbl")).alias("cand")
+            )
+            # pointer jump (label-of-label): cand is itself a node id, so one
+            # self-join replaces it with cand's own (≤) label — convergence
+            # drops from O(diameter) to O(log diameter) rounds
+            lut = cand.select(F.col("node").alias("jn"), F.col("cand").alias("jl"))
+            upd = barrier(
+                cand.join(lut, cand.cand == lut.jn).select(
+                    "node", "lbl", F.col("jl").alias("new_lbl")
+                ),
+                loop=True,
+            )  # in-loop truncation: `cand` is referenced twice, so an
+            # unpinned tree doubles per round
+            # count runs on the checkpointed frame — no recompute, no extra join
+            changed = upd.filter(F.col("new_lbl") != F.col("lbl")).count()
+            labels = upd.select("node", F.col("new_lbl").alias("lbl"))
+            if changed == 0:
+                break
+    finally:
+        edges.unpersist()
     return labels
 
 
@@ -378,7 +381,7 @@ def d_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.selectExpr("id_b AS src", "id_a AS dst")
     )
     nodes = (
-        edges.select(F.col("src").alias("node")).distinct().localCheckpoint()
+        edges.select(F.col("src").alias("node")).distinct().transform(barrier)
     )
     n_nodes = nodes.count()  # scalar driver state, like k-means centroids
     if n_nodes == 0:
@@ -427,7 +430,7 @@ def d_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.lit(base)
                     + F.lit(PAGERANK_D) * F.coalesce(F.col("s"), F.lit(0.0))
                 ).alias("r"),
-            ).localCheckpoint()
+            ).transform(barrier)
     return ordered_result(
         rank.select(
             F.col("node").alias("doc_id"), F.round("r", 9).alias("pagerank")
@@ -506,12 +509,15 @@ def d_cluster_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@contextlib.contextmanager
 def _capped_shingle_stats(docs: DataFrame):
-    """``(counts, inter, sh_cache)`` over the DF-capped shingle space —
-    callers MUST ``sh_cache.unpersist()`` once their result is
-    materialized (both consumers do, right after ``ordered_result``'s
-    eager checkpoint) —
-    the shared engine of :func:`d_ngram_jaccard` and
+    """Context manager yielding ``(counts, inter)`` over the DF-capped
+    shingle space; the shingle cache behind both is freed when the
+    block exits, normally or by exception, so callers materialize
+    their result inside it (both end in ``ordered_result``'s eager
+    barrier; under a plan audit the sort is lazy and a re-execution
+    merely recomputes the cache). The shared engine of
+    :func:`d_ngram_jaccard` and
     :func:`d_containment_pairs` (r14 restructure, guide §2.4 + the
     ``_banded_hamming_pairs`` precedent measured 2.0→1.1s in r12):
 
@@ -536,7 +542,7 @@ def _capped_shingle_stats(docs: DataFrame):
       b.doc_id`` predicate. With ``counts`` in-row, ``grouped`` has a
       single consumer and needs no checkpoint of its own.
     """
-    garr = _doc_grams_df(docs).localCheckpoint()
+    garr = _doc_grams_df(docs).transform(barrier)
     # r15: ONE explode, ONE exchange over the gram relation. The r14
     # shape exploded ``garr`` twice — once under the hot-count
     # aggregation, once under ``grouped`` — and each pass paid the
@@ -550,8 +556,7 @@ def _capped_shingle_stats(docs: DataFrame):
     # AQE (the explicit-width variant measured slower at fixture scale
     # and a constant would be wrong at cluster scale). Cache posture:
     # MEMORY_AND_DISK of the same bytes the r14 shape wrote through
-    # its second exchange; the bench frees the blocks synchronously
-    # after each run and other consumers free via the ContextCleaner.
+    # its second exchange, freed when the caller's with-block exits.
     # Same-window A/B d_containment_pairs 2.35 -> 1.85s, rows
     # identical; hot keeps its eager checkpoint (two consumers).
     raw_sh = (
@@ -559,60 +564,63 @@ def _capped_shingle_stats(docs: DataFrame):
         .repartition("x")
         .persist()
     )
-    hot = (
-        raw_sh.groupBy("x")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > NGRAM_DF_CAP)
-        .select("x")
-        .localCheckpoint()
-    )
-    # r15 scale guard (VERDICT r14 item 5 / ADVICE r14): the in-row
-    # ``size(hs) − |hs ∩ hot|`` fast path folds the ENTIRE hot-shingle
-    # list into one broadcast array row — fine while |hot| is small
-    # (at any SF of this corpus it is tens of rows), but on a
-    # boilerplate-heavy corpus the hot set grows ∝ corpus/cap and a
-    # single million-entry array row plus an O(|hot|)-per-document
-    # in-row intersect is the wrong shape. ``hot`` is already
-    # materialized (eager localCheckpoint above), so sizing it is one
-    # tiny job over checkpoint blocks; above the cap, fall back to the
-    # exploded anti-join + groupBy(doc_id) count — the pre-r14 shape
-    # whose per-task state is bounded regardless of |hot| — and let
-    # the planner pick the anti-join strategy instead of forcing a
-    # broadcast build of an oversized hot relation. Equivalent by
-    # construction: both count each document's non-hot distinct
-    # shingles, and a document with ZERO surviving shingles can never
-    # appear in ``inter`` (no shared shingle survives), so its missing
-    # count row is unobservable through the inner joins both consumers
-    # use.
-    hot_is_small = hot.count() <= HOT_BROADCAST_CAP
-    hot_b = F.broadcast(hot) if hot_is_small else hot
-    grouped = (
-        raw_sh.join(hot_b, "x", "left_anti")
-        .groupBy("x")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("g"))
-    )
-    if hot_is_small:
-        hot_arr = hot.agg(F.collect_list("x").alias("hot"))
-        counts = garr.crossJoin(F.broadcast(hot_arr)).select(
-            "doc_id",
-            (
-                F.size("hs") - F.size(F.array_intersect("hs", "hot"))
-            ).cast("bigint").alias("n"),
+    try:
+        hot = (
+            raw_sh.groupBy("x")
+            .agg(F.count(F.lit(1)).alias("df"))
+            .filter(F.col("df") > NGRAM_DF_CAP)
+            .select("x")
+            .transform(barrier)
         )
-    else:
-        counts = (
+        # r15 scale guard (VERDICT r14 item 5 / ADVICE r14): the in-row
+        # ``size(hs) − |hs ∩ hot|`` fast path folds the ENTIRE hot-shingle
+        # list into one broadcast array row — fine while |hot| is small
+        # (at any SF of this corpus it is tens of rows), but on a
+        # boilerplate-heavy corpus the hot set grows ∝ corpus/cap and a
+        # single million-entry array row plus an O(|hot|)-per-document
+        # in-row intersect is the wrong shape. ``hot`` is already
+        # materialized (eager barrier above), so sizing it is one
+        # tiny job over checkpoint blocks; above the cap, fall back to the
+        # exploded anti-join + groupBy(doc_id) count — the pre-r14 shape
+        # whose per-task state is bounded regardless of |hot| — and let
+        # the planner pick the anti-join strategy instead of forcing a
+        # broadcast build of an oversized hot relation. Equivalent by
+        # construction: both count each document's non-hot distinct
+        # shingles, and a document with ZERO surviving shingles can never
+        # appear in ``inter`` (no shared shingle survives), so its missing
+        # count row is unobservable through the inner joins both consumers
+        # use.
+        hot_is_small = hot.count() <= HOT_BROADCAST_CAP
+        hot_b = F.broadcast(hot) if hot_is_small else hot
+        grouped = (
             raw_sh.join(hot_b, "x", "left_anti")
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+            .groupBy("x")
+            .agg(F.array_sort(F.collect_list("doc_id")).alias("g"))
         )
-    inter = (
-        combination_pairs(
-            grouped.filter(F.size("g") >= 2), "g", "id_a", "id_b"
+        if hot_is_small:
+            hot_arr = hot.agg(F.collect_list("x").alias("hot"))
+            counts = garr.crossJoin(F.broadcast(hot_arr)).select(
+                "doc_id",
+                (
+                    F.size("hs") - F.size(F.array_intersect("hs", "hot"))
+                ).cast("bigint").alias("n"),
+            )
+        else:
+            counts = (
+                raw_sh.join(hot_b, "x", "left_anti")
+                .groupBy("doc_id")
+                .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+            )
+        inter = (
+            combination_pairs(
+                grouped.filter(F.size("g") >= 2), "g", "id_a", "id_b"
+            )
+            .groupBy("id_a", "id_b")
+            .agg(F.count(F.lit(1)).alias("n_inter"))
         )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    return counts, inter, raw_sh
+        yield counts, inter
+    finally:
+        raw_sh.unpersist()
 
 
 def d_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -631,31 +639,23 @@ def d_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared :func:`_capped_shingle_stats` group-and-combine shape (r14)
     — no shingle self-join."""
     docs = load_table(spark, sf_dir, "documents", fanout=True)
-    counts, inter, sh_cache = _capped_shingle_stats(docs)
-    joined = (
-        inter.join(counts.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n", "n_a"), "id_a")
-        .join(counts.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n", "n_b"), "id_b")
-    )
-    jacc = F.col("n_inter").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    ).cast("double")
-    out = (
-        joined.select(
-            "id_a",
-            "id_b",
-            F.round(jacc, 9).alias("jaccard"),
+    with _capped_shingle_stats(docs) as (counts, inter):
+        joined = (
+            inter.join(counts.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n", "n_a"), "id_a")
+            .join(counts.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n", "n_b"), "id_b")
         )
-        .filter(F.col("jaccard") >= 0.05)
-        .transform(ordered_result, "id_a", "id_b")
-    )
-    # ordered_result materialized the result eagerly, so the shingle
-    # cache has served both aggregations — release it NOW instead of
-    # leaving a CacheManager entry pinned for the session (the
-    # ADVICE-r7 leak class; a corpus-gram-sized cache at 100 TB must
-    # not outlive its query). Under a plan audit the sort is lazy and
-    # the unpersist merely makes a re-execution recompute the cache.
-    sh_cache.unpersist()
-    return out
+        jacc = F.col("n_inter").cast("double") / (
+            F.col("n_a") + F.col("n_b") - F.col("n_inter")
+        ).cast("double")
+        return (
+            joined.select(
+                "id_a",
+                "id_b",
+                F.round(jacc, 9).alias("jaccard"),
+            )
+            .filter(F.col("jaccard") >= 0.05)
+            .transform(ordered_result, "id_a", "id_b")
+        )
 
 
 # Asymmetric containment threshold: c(A,B) = |S_A ∩ S_B| / |S_A| (Broder's
@@ -684,28 +684,26 @@ def d_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     two broadcast-sized count joins. The only delta is the final ratio
     arithmetic — containment adds no new shuffle."""
     docs = load_table(spark, sf_dir, "documents", fanout=True)
-    counts, inter, sh_cache = _capped_shingle_stats(docs)
-    joined = inter.join(
-        counts.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n", "n_a"),
-        "id_a",
-    ).join(
-        counts.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n", "n_b"),
-        "id_b",
-    )
-    c_ab = F.col("n_inter").cast("double") / F.col("n_a").cast("double")
-    c_ba = F.col("n_inter").cast("double") / F.col("n_b").cast("double")
-    out = (
-        joined.filter(F.greatest(c_ab, c_ba) >= CONTAIN_MIN)
-        .select(
+    with _capped_shingle_stats(docs) as (counts, inter):
+        joined = inter.join(
+            counts.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n", "n_a"),
             "id_a",
+        ).join(
+            counts.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n", "n_b"),
             "id_b",
-            F.round(c_ab, 9).alias("cont_a_in_b"),
-            F.round(c_ba, 9).alias("cont_b_in_a"),
         )
-        .transform(ordered_result, "id_a", "id_b")
-    )
-    sh_cache.unpersist()  # see d_ngram_jaccard — freed post-materialization
-    return out
+        c_ab = F.col("n_inter").cast("double") / F.col("n_a").cast("double")
+        c_ba = F.col("n_inter").cast("double") / F.col("n_b").cast("double")
+        return (
+            joined.filter(F.greatest(c_ab, c_ba) >= CONTAIN_MIN)
+            .select(
+                "id_a",
+                "id_b",
+                F.round(c_ab, 9).alias("cont_a_in_b"),
+                F.round(c_ba, 9).alias("cont_b_in_a"),
+            )
+            .transform(ordered_result, "id_a", "id_b")
+        )
 
 
 def d_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -739,15 +737,13 @@ def d_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the same audit runs on a SAMPLE of the corpus (the
     truth side is the expensive leg, exactly like IVF recall audits
     sample queries)."""
-    from conduit_spark.analytics.processor_queries import (
-        _materialized_fixture,
-    )
+    from conduit_spark.analytics.processor_queries import _spread
 
-    truth = _materialized_fixture(
+    truth = session_materialize(
         "ngram_jaccard_pairs",
         spark,
         sf_dir,
-        lambda: d_ngram_jaccard(spark, sf_dir),
+        lambda: _spread(d_ngram_jaccard(spark, sf_dir)),
     ).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     found = (
         lsh_pairs_cached(spark, sf_dir)
@@ -826,7 +822,7 @@ def d_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     fps = _simhash_fps(
         load_table(spark, sf_dir, "documents", fanout=True)
-    ).localCheckpoint()
+    ).transform(barrier)
     bands = F.array(
         *[
             F.struct(
@@ -912,7 +908,7 @@ def contam_grams_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     rationale as :func:`lsh_pairs_cached`: at 100 TB the production
     decontamination service computes the gram index once per corpus
     snapshot and fans out to score/funnel/audit consumers."""
-    from conduit_spark.analytics.processor_queries import _materialized_fixture
+    from conduit_spark.analytics.processor_queries import _spread
 
     def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents", fanout=True)
@@ -921,11 +917,11 @@ def contam_grams_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.transform(word_grams(CONTAM_K), lambda g: md5_int32(g))
         )  # in-row hash-level dedup — zero shuffles (the _shingles_df
         # r14 shape); per-doc distinct IS the semantics
-        return docs.filter(n >= CONTAM_K).select(
-            "doc_id", F.explode(hashes).alias("x")
+        return _spread(
+            docs.filter(n >= CONTAM_K).select("doc_id", F.explode(hashes).alias("x"))
         )
 
-    return _materialized_fixture("contam_grams", spark, sf_dir, build)
+    return session_materialize("contam_grams", spark, sf_dir, build)
 
 
 def contamination_scores(docs: DataFrame) -> DataFrame:
@@ -943,7 +939,7 @@ def contamination_scores(docs: DataFrame) -> DataFrame:
                 F.transform(word_grams(CONTAM_K), lambda g: md5_int32(g))
             )
         ).alias("x"),  # in-row hash-level dedup — zero shuffles
-    ).localCheckpoint()
+    ).transform(barrier)
     return _contamination_from_grams(rel)
 
 
@@ -1034,7 +1030,7 @@ def d_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             md5_int32(F.col("span")).alias("h"),
             (F.col("doc_id") * _SPAN_ENC + F.col("span_idx")).alias("occ_key"),
         )
-        .localCheckpoint()  # feeds the winner agg AND the join back
+        .transform(barrier)  # feeds the winner agg AND the join back
     )
     winners = occ.groupBy("h").agg(F.min("occ_key").alias("win_key"))
     return (
@@ -1114,9 +1110,9 @@ def d_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist) so the blocks free with the DataFrame. r14: per-doc
     # distinct-hash ARRAYS — signatures, counts and the verify are all
     # in-row folds (see :func:`_doc_grams_df`), no groupBy(doc_id).
-    garr = _doc_grams_df(docs).localCheckpoint()
+    garr = _doc_grams_df(docs).transform(barrier)
     sigs = garr.select("doc_id", *_sig_cols())
-    bb = _band_buckets(sigs).withColumn("is_new", _is_new()).localCheckpoint()
+    bb = _band_buckets(sigs).withColumn("is_new", _is_new()).transform(barrier)
     hot = (
         bb.filter(~F.col("is_new"))
         .groupBy("band", "bucket")
@@ -1274,7 +1270,7 @@ def d_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     occ = (
         base.select("doc_id", F.posexplode(grams).alias("j", "gram"))
         .select("doc_id", "j", md5_int32(F.col("gram")).alias("h"))
-        .localCheckpoint()  # feeds the corpus count AND the join back
+        .transform(barrier)  # feeds the corpus count AND the join back
     )
     dup_h = occ.groupBy("h").agg(F.count(F.lit(1)).alias("c")).filter(
         F.col("c") >= 2

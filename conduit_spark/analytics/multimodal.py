@@ -44,6 +44,7 @@ from pyspark.sql.types import (
 
 from conduit_spark.analytics import combination_pairs, ordered_result
 from conduit_spark.sources.tables import load_table
+from conduit_spark.plans import barrier
 
 MEDIA_SCHEMA = StructType(
     [
@@ -1346,7 +1347,7 @@ def m_ahash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # already thousands of partitions and the branch is skipped.
     fps = docs.mapInPandas(
         run, "media_id long, fp_hi long, fp_lo long"
-    ).localCheckpoint()
+    ).transform(barrier)
     # Banding + capped pair generation + hamming verify: the shared
     # tail (r12 restructure: groupBy + in-codegen combination explode
     # replaces the r11 bucket self-join — two shuffle legs + join down
@@ -1486,7 +1487,7 @@ def a_fp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     fps = docs.mapInPandas(
         run, "media_id long, fp_hi long, fp_lo long"
-    ).localCheckpoint()
+    ).transform(barrier)
     return _banded_hamming_pairs(
         fps, A_FP_BANDS, A_FP_BUCKET_CAP, A_FP_MAX_HAMMING
     )
@@ -1605,7 +1606,7 @@ def m_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     fps = docs.mapInPandas(
         run, "media_id long, fp_hi long, fp_lo long"
-    ).localCheckpoint()
+    ).transform(barrier)
     return _banded_hamming_pairs(
         fps, PHASH_BANDS, PHASH_BUCKET_CAP, PHASH_MAX_HAMMING
     )
@@ -1679,7 +1680,7 @@ def m_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     fps = docs.mapInPandas(
         run, "media_id long, fp_hi long, fp_lo long"
-    ).localCheckpoint()
+    ).transform(barrier)
     return _banded_hamming_pairs(
         fps, DHASH_BANDS, DHASH_BUCKET_CAP, DHASH_MAX_HAMMING
     )

@@ -13,6 +13,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from conduit_spark.pipeline import Pipeline, parse_yaml
+from conduit_spark.plans import session_dir
 from conduit_spark.sources.generator import generator_source
 from conduit_spark.sources.tables import load_table
 
@@ -393,18 +394,14 @@ def g_pg_wal_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return ev.select(F.explode(lines).alias("value"))
 
-    import tempfile
-
-    from conduit_spark.analytics.processor_queries import _FIXTURE_CACHE
-
-    key = ("wal2json_capture", sf_dir)
-    path = _FIXTURE_CACHE.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="conduit_fixture_wal2json_") + "/cap"
-        build_capture().repartition(
-            spark.sparkContext.defaultParallelism
-        ).write.mode("overwrite").text(path)
-        _FIXTURE_CACHE[key] = path
+    path = session_dir(
+        "wal2json_capture",
+        spark,
+        sf_dir,
+        lambda path: build_capture()
+        .repartition(spark.sparkContext.defaultParallelism)
+        .write.text(path),
+    )
 
     env = wal2json_source(spark, path, key_cols=["event_id"])
     final = cdc_apply(
@@ -526,12 +523,7 @@ def g_pg_live_wal_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from conduit_spark.operators.cdc import cdc_apply
     from conduit_spark.sources.postgres_wal import lsn_to_long, wal2json_source
 
-    from conduit_spark.analytics.processor_queries import _FIXTURE_CACHE
-
-    key = ("pg_live_wal_capture", sf_dir)
-    path = _FIXTURE_CACHE.get(key)
-    if path is None:
-        import tempfile
+    def write(path: str) -> None:
         import time as _time
 
         from conduit_spark.functions.minipg import MiniPGServer, lsn_text
@@ -569,7 +561,6 @@ def g_pg_live_wal_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             return _json.dumps(doc)
 
         cert_pem, key_pem = generate_self_signed()
-        path = tempfile.mkdtemp(prefix="conduit_fixture_pglive_") + "/cap"
         with MiniPGServer(
             keepalive_s=0.05,
             users={"conduit": "gate-pw"},
@@ -601,7 +592,8 @@ def g_pg_live_wal_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             tail.stop()
             if srv.confirmed_flush_lsn < srv.current_lsn:
                 raise RuntimeError("live WAL tail never confirmed the feed")
-        _FIXTURE_CACHE[key] = path
+
+    path = session_dir("pg_live_wal_capture", spark, sf_dir, write)
 
     env = wal2json_source(spark, path, key_cols=["event_id"])
     final = cdc_apply(
@@ -645,16 +637,10 @@ def g_pg_pgoutput_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver."""
     import os as _os
 
-    from conduit_spark.analytics.processor_queries import _FIXTURE_CACHE
     from conduit_spark.operators.cdc import cdc_apply
     from conduit_spark.sources.postgres_wal import pgoutput_source
 
-    key = ("pgoutput_capture", sf_dir)
-    path = _FIXTURE_CACHE.get(key)
-    if path is None:
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="conduit_fixture_pgoutput_") + "/cap"
+    def write(path: str) -> None:
         _os.makedirs(path, exist_ok=True)
         ev = load_table(spark, sf_dir, "events").select(
             "event_id", "value", (F.col("event_id") % 32).alias("grp")
@@ -725,7 +711,8 @@ def g_pg_pgoutput_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy("grp").applyInPandas(
             write_group, "grp int, n long"
         ).count()  # materialize the side-effect writes
-        _FIXTURE_CACHE[key] = path
+
+    path = session_dir("pgoutput_capture", spark, sf_dir, write)
 
     env = pgoutput_source(spark, path, source_id="pg")
     final = cdc_apply(
@@ -760,23 +747,16 @@ def g_file_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     line, a mangled charset, or a broken raw→structured upgrade cannot
     match (r8 gate candidate; closes `builtin:file`'s pytest-only
     status, VERDICT r6 §2.2)."""
-    import tempfile
-
     from conduit_spark import operators as ops
-    from conduit_spark.analytics.processor_queries import _FIXTURE_CACHE
     from conduit_spark.sources.file_source import file_source
 
-    key = ("file_roundtrip_lines", sf_dir)
-    path = _FIXTURE_CACHE.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="conduit_fixture_filesrc_") + "/lines"
+    def write(path: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
         docs.select(
             F.to_json(F.struct("doc_id", "text")).alias("value")
-        ).repartition(spark.sparkContext.defaultParallelism).write.mode(
-            "overwrite"
-        ).text(path)
-        _FIXTURE_CACHE[key] = path
+        ).repartition(spark.sparkContext.defaultParallelism).write.text(path)
+
+    path = session_dir("file_roundtrip_lines", spark, sf_dir, write)
 
     env = file_source(spark, path, fmt="text", source_id="gatefile")
     dec = ops.json_decode(env)

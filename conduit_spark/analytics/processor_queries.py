@@ -28,6 +28,7 @@ from pyspark.sql.types import (
 
 from conduit_spark import envelope as env
 from conduit_spark import operators as ops
+from conduit_spark.plans import session_materialize
 from conduit_spark.sources.tables import load_table
 
 EVENTS_PAYLOAD_SCHEMA = StructType(
@@ -42,56 +43,28 @@ EVENTS_PAYLOAD_SCHEMA = StructType(
 )
 
 
-_FIXTURE_CACHE: dict[tuple[str, str], str] = {}
-
-
-def _materialized_fixture(name: str, spark: SparkSession, sf_dir: str, build) -> DataFrame:
-    """Synthesize a fixture relation ONCE per session into temp parquet
-    and re-read it afterwards. Two reasons (both from the r3 verdict):
-    benchmark timings should measure the operator under test, not the
-    to_json envelope-synthesis scaffolding re-run every repetition; and
-    the parquet scan doubles as the CollapseProject barrier that keeps
-    the synthesis from inlining into every downstream JSON-parse
-    reference (the old per-query ``localCheckpoint``). Correctness is
-    unaffected — the first call builds and writes exactly the rows the
-    inline plan produced."""
-    import tempfile
-
-    from conduit_spark.plans import barriers_suspended
-
-    if barriers_suspended():
-        # plan-audit mode (plans.barriers_disabled): inline the build
-        # plan instead of materializing, so the audit sees the full
-        # upstream DAG; the cache is neither read nor populated, so a
-        # later non-audit run in the same session still materializes.
-        return build()
-
-    key = (name, sf_dir)
-    path = _FIXTURE_CACHE.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix=f"conduit_fixture_{name}_") + "/data"
-        # Spread across the session's cores: the source tables at test
-        # SF fit one parquet split, so without this every fixture lands
-        # in ONE file and every downstream envelope query runs its JSON
-        # parsing on ONE task (measured 3.7s → 0.4s for the debezium
-        # unwrap at sf0.1 on local[32]).
-        build().repartition(
-            spark.sparkContext.defaultParallelism
-        ).write.mode("overwrite").parquet(path)
-        _FIXTURE_CACHE[key] = path
-    return spark.read.parquet(path)
+def _spread(df: DataFrame) -> DataFrame:
+    """Spread a synthesized fixture across the session's cores before it
+    is session-materialized: the source tables at test SF fit one
+    parquet split, so without this every fixture lands in ONE file and
+    every downstream envelope query runs its JSON parsing on ONE task
+    (measured 3.7s → 0.4s for the debezium unwrap at sf0.1 on
+    local[32])."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def _events_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _materialized_fixture(
+    return session_materialize(
         "events_env",
         spark,
         sf_dir,
-        lambda: env.from_table(
-            load_table(spark, sf_dir, "events"),
-            key_cols=["event_id"],
-            source_id="events-src",
-            typed=True,
+        lambda: _spread(
+            env.from_table(
+                load_table(spark, sf_dir, "events"),
+                key_cols=["event_id"],
+                source_id="events-src",
+                typed=True,
+            )
         ),
     )
 
@@ -176,7 +149,9 @@ def _raw_props_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(False).alias("is_structured"),
         )
 
-    return _materialized_fixture("raw_props_env", spark, sf_dir, build)
+    return session_materialize(
+        "raw_props_env", spark, sf_dir, lambda: _spread(build())
+    )
 
 
 def p_json_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -230,12 +205,14 @@ def p_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_tokens = docs.select(
         "doc_id", F.slice(F.split(F.col("text"), " "), 1, 3).alias("tokens")
     )
-    e = _materialized_fixture(
+    e = session_materialize(
         "docs_tokens_env",
         spark,
         sf_dir,
-        lambda: env.from_table(
-            with_tokens, key_cols=["doc_id"], source_id="docs", typed=True
+        lambda: _spread(
+            env.from_table(
+                with_tokens, key_cols=["doc_id"], source_id="docs", typed=True
+            )
         ),
     )
     out = ops.split(e, ".Payload.After.tokens")
@@ -252,8 +229,8 @@ def p_unwrap_debezium(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     A Debezium envelope is synthesized from each event row (pure
     projection), then unwrapped by the operator."""
-    e = _materialized_fixture(
-        "dbz_env", spark, sf_dir, lambda: _build_dbz_envelope(spark, sf_dir)
+    e = session_materialize(
+        "dbz_env", spark, sf_dir, lambda: _spread(_build_dbz_envelope(spark, sf_dir))
     )
     out = ops.unwrap_debezium(e)
     return out.select(
@@ -353,8 +330,8 @@ def p_json_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def p_unwrap_kafka_connect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """unwrap.kafkaconnect: {schema,payload} envelope → payload
     (impl/unwrap/kafka_connect.go:80-168)."""
-    e = _materialized_fixture(
-        "kc_env", spark, sf_dir, lambda: _build_kc_envelope(spark, sf_dir)
+    e = session_materialize(
+        "kc_env", spark, sf_dir, lambda: _spread(_build_kc_envelope(spark, sf_dir))
     )
     out = ops.unwrap_kafka_connect(e)
     return out.select(
@@ -394,8 +371,11 @@ def _build_kc_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
 def p_unwrap_opencdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """unwrap.opencdc: serialized inner record replaces the outer
     envelope except .Position (impl/unwrap/opencdc.go:53-58)."""
-    e = _materialized_fixture(
-        "opencdc_env", spark, sf_dir, lambda: _build_opencdc_envelope(spark, sf_dir)
+    e = session_materialize(
+        "opencdc_env",
+        spark,
+        sf_dir,
+        lambda: _spread(_build_opencdc_envelope(spark, sf_dir)),
     )
     out = ops.unwrap_opencdc(e)
     return out.select(
@@ -484,15 +464,17 @@ def p_avro_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     zigzag-varint(doc_id) + varint(utf8-len) + utf8 bytes — so the
     pure-Python codec's wire output is checked against the spec, not
     against itself."""
-    e = _materialized_fixture(
+    e = session_materialize(
         "docs2_env",
         spark,
         sf_dir,
-        lambda: env.from_table(
-            load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-            key_cols=["doc_id"],
-            source_id="docs",
-            typed=True,
+        lambda: _spread(
+            env.from_table(
+                load_table(spark, sf_dir, "documents").select("doc_id", "text"),
+                key_cols=["doc_id"],
+                source_id="docs",
+                typed=True,
+            )
         ),
     )
     out = ops.avro_encode(e, _AVRO_DOC_SCHEMA)
@@ -510,15 +492,17 @@ def p_avro_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload (impl/avro/decode.go:114-166, config.go:22-57)."""
     from conduit_spark.schema_registry import SchemaRegistry
 
-    e = _materialized_fixture(
+    e = session_materialize(
         "docs3_env",
         spark,
         sf_dir,
-        lambda: env.from_table(
-            load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang"),
-            key_cols=["doc_id"],
-            source_id="docs",
-            typed=True,
+        lambda: _spread(
+            env.from_table(
+                load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang"),
+                key_cols=["doc_id"],
+                source_id="docs",
+                typed=True,
+            )
         ),
     )
     reg = SchemaRegistry()
@@ -537,10 +521,12 @@ def p_avro_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _cdc_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Debezium changelog fixture (create per event, update for
-    event_id%3==0, delete for event_id%5==0), materialized via
-    :func:`_materialized_fixture`."""
-    return _materialized_fixture(
-        "cdc_changelog", spark, sf_dir, lambda: _build_cdc_changelog(spark, sf_dir)
+    event_id%3==0, delete for event_id%5==0), session-materialized."""
+    return session_materialize(
+        "cdc_changelog",
+        spark,
+        sf_dir,
+        lambda: _spread(_build_cdc_changelog(spark, sf_dir)),
     )
 
 
@@ -631,7 +617,7 @@ def warm_processor_fixtures(spark: SparkSession, sf_dir: str) -> None:
     """Materialize every processor query's envelope fixture OUTSIDE a
     timed path (bench.py calls this next to ``warm_wire_endpoints`` —
     same r9/r10 rationale): constructing each query runs its
-    ``_materialized_fixture`` builds eagerly (the parquet write
+    ``session_materialize`` builds eagerly (the parquet write
     happens at construction), so the first TIMED run measures the
     operator, not 3-4s of envelope synthesis. Without this the
     alphabetically-first extended processor query (single-run timed)

@@ -32,6 +32,7 @@ from conduit_spark.analytics.chunking import (
 from conduit_spark.analytics.similarity import cosine
 from conduit_spark.operators.enrich import HASH_EMBED_DIM
 from conduit_spark.sources.tables import load_table
+from conduit_spark.plans import barrier
 
 TOP_K = 5
 QUERY_TEXT = "fast hash join on big table"
@@ -311,7 +312,7 @@ def _hn_scored(docs: DataFrame) -> DataFrame:
     return (
         bm25_scores_multi(docs, HN_QUERIES)
         .select("query_id", "doc_id", "bm25")
-        .localCheckpoint()
+        .transform(barrier)
     )
 
 
@@ -346,7 +347,7 @@ def rag_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("query_id", "doc_id", "bm25")
         )
         pool = leg if pool is None else pool.unionByName(leg)
-    pool = pool.localCheckpoint()  # 18 rows; feeds both rank-join sides
+    pool = pool.transform(barrier)  # 18 rows; feeds both rank-join sides
     a, b = pool.alias("a"), pool.alias("b")
     better = (F.col("b.bm25") > F.col("a.bm25")) | (
         (F.col("b.bm25") == F.col("a.bm25"))
@@ -463,7 +464,7 @@ def rag_context_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     pool = (
         pool.join(ntok, "doc_id")
         .select("query_id", "doc_id", "bm25", "n_tokens")
-        .localCheckpoint()  # 3 x PACK_POOL rows; feeds both rank sides
+        .transform(barrier)  # 3 x PACK_POOL rows; feeds both rank sides
     )
     a, b = pool.alias("a"), pool.alias("b")
     better = (F.col("b.bm25") > F.col("a.bm25")) | (

@@ -31,11 +31,14 @@ scale-up hazard.
 
 from __future__ import annotations
 
+import re
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from conduit_spark.sources.tables import load_events_raw, load_table
 from conduit_spark.analytics import ordered_result
+from conduit_spark.plans import barrier
 
 
 def _dec(col, scale: int = 2):
@@ -679,7 +682,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("double")
         .alias("total_revenue")
-    ).localCheckpoint(eager=True)
+    ).transform(barrier)
     max_rev = rev.agg(F.max("total_revenue").alias("max_rev"))
     return (
         rev.join(
@@ -848,7 +851,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = (
         load_table(spark, sf_dir, "part")
         .filter((F.col("p_type") == "STANDARD") & (F.col("p_size") <= 10))
-        .localCheckpoint()
+        .transform(barrier)
     )
     nat = load_table(spark, sf_dir, "nation")
     reg = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
@@ -857,7 +860,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nat), F.col("s_nationkey") == nat.n_nationkey)
         .join(F.broadcast(reg), F.col("n_regionkey") == reg.r_regionkey)
         .select("s_suppkey", "s_name", "s_acctbal", "n_name")
-        .localCheckpoint()
+        .transform(barrier)
     )
     li = load_table(spark, sf_dir, "lineitem")
     offers = (
@@ -867,7 +870,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("unit_cost")
         )
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     best = offers.groupBy(F.col("l_partkey").alias("bk")).agg(
         F.min("unit_cost").alias("min_cost")
@@ -911,7 +914,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(supp.select("s_suppkey"), li.l_suppkey == F.col("s_suppkey"))
         .groupBy("l_partkey")
         .agg(F.sum(value_expr).alias("value_dec"))
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     # Threshold compare stays in exact decimal end-to-end — a
     # double-rounded boundary could flip a borderline part between
@@ -958,7 +961,7 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("l_orderkey", "l_suppkey")
         .agg(F.sum(late).alias("late_lines"))
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     ostats = pair.groupBy(F.col("l_orderkey").alias("ok")).agg(
         F.count(F.lit(1)).alias("n_supp"),
@@ -1067,8 +1070,9 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # files out from under the first's cached relation
     # (FAILED_READ_FILE mid-scan). Per-process names make the ingest
     # private; the stale-location cleanup below handles PID reuse.
+    # (identifier-safe: the data dir name may hold any character)
     tag = (
-        sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
+        re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
         + f"_{_os.getpid()}"
     )
     t_orders, t_lineitem = f"b_orders_{tag}", f"b_lineitem_{tag}"
@@ -1178,7 +1182,7 @@ def bloom_runtime_filter(build_df: DataFrame, key: str):
     # distinct set is the part both need, and it is checkpoint-sized by
     # construction). Bits from distinct keys equal bits from raw keys:
     # OR-ing a key's positions twice is idempotent.
-    keys = build_df.select(key).distinct().localCheckpoint()
+    keys = build_df.select(key).distinct().transform(barrier)
     n_keys = keys.count()
     m = BLOOM_RF_MIN_M
     while m < min(BLOOM_RF_MAX_M, n_keys * BLOOM_RF_BITS_PER_KEY):

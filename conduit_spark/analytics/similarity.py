@@ -31,6 +31,7 @@ from conduit_spark.functions.hashing import (
     sql_md5_int32,
 )
 from conduit_spark.sources.tables import load_table
+from conduit_spark.plans import barrier, session_materialize
 
 N_PLANES = 8
 DIM = 64
@@ -209,7 +210,7 @@ def s_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bb = (
         emb.select("vec_id", F.explode(bands).alias("bb"))
         .select("vec_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-        .localCheckpoint()
+        .transform(barrier)
     )
     hot = (
         bb.groupBy("band", "bucket")
@@ -265,7 +266,7 @@ def s_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # materialize the bucket assignment once: both join sides use it,
     # and the 8-plane expression is ~8 × 64-element folds per row
-    be = emb.withColumn("bucket", lsh_bucket("embedding")).localCheckpoint()
+    be = emb.withColumn("bucket", lsh_bucket("embedding")).transform(barrier)
     a = be.select(F.col("vec_id").alias("src"), "bucket", F.col("embedding").alias("ea"))
     b = be.select(F.col("vec_id").alias("dst"), "bucket", F.col("embedding").alias("eb"))
     scored = (
@@ -754,52 +755,25 @@ def _assign_udf_multi(cents_by_m: dict[int, list[tuple[int, list[int]]]]):
     return assign
 
 
-_LLOYD_CACHE: dict[tuple, str] = {}  # (appId, sf_dir) -> temp-parquet dir
-
-
 def _lloyd_cached(spark: SparkSession, sf_dir: str):
-    """One Lloyd training per (session, sf_dir): both the trainer query
-    (s_kmeans_centroids) and SemDeDup call :func:`_lloyd`, and before
-    round 8 each gate/bench invocation trained twice. Keyed by
-    applicationId so a fresh session can never reuse another session's
-    relations. Deterministic training makes the shared result
+    """One Lloyd training per (session, sf_dir), session-materialized:
+    both the trainer query (s_kmeans_centroids) and SemDeDup consume
+    :func:`_lloyd`. Deterministic training makes the shared result
     bit-identical to per-query training (the oracle's unrolled
-    iterations are unchanged).
+    iterations are unchanged). The final centroid relation is
+    materialized too, so consumers do not re-run the last Lloyd
+    iteration per reference."""
 
-    Round 14: the cache holds TEMP-PARQUET paths, not live
-    localCheckpoint handles (the ``_materialized_fixture`` treatment).
-    The checkpointed blocks a cached DataFrame pinned for the rest of
-    the session were the leading suspect for the r13 in-suite
-    inflation window (VERDICT r13 item 1), and a parquet
-    materialization lets the bench free every query's checkpoint
-    blocks between queries without invalidating this cache. The final
-    centroid relation is materialized too, so consumers no longer
-    re-run the last Lloyd iteration per reference."""
-    from conduit_spark.plans import barriers_suspended
-
-    if barriers_suspended():
-        # plan-audit mode: build fresh so the audit sees the full
-        # upstream DAG, and never populate the cache with
-        # un-checkpointed relations
-        return _lloyd(load_table(spark, sf_dir, "embeddings"))
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LLOYD_CACHE:
-        import tempfile
-
+    def build():
         vecs, cents_df = _lloyd(load_table(spark, sf_dir, "embeddings"))
-        base = tempfile.mkdtemp(prefix="conduit_lloyd_")
         # spread the slim vector relation across the session's cores so
         # downstream assignment UDFs parallelize (fixture precedent)
-        vecs.repartition(
-            spark.sparkContext.defaultParallelism
-        ).write.mode("overwrite").parquet(base + "/vecs")
-        cents_df.write.mode("overwrite").parquet(base + "/cents")
-        _LLOYD_CACHE[key] = base
-    base = _LLOYD_CACHE[key]
-    return (
-        spark.read.parquet(base + "/vecs"),
-        spark.read.parquet(base + "/cents"),
-    )
+        return (
+            vecs.repartition(spark.sparkContext.defaultParallelism),
+            cents_df,
+        )
+
+    return session_materialize("lloyd", spark, sf_dir, build)
 
 
 def _lloyd(emb: DataFrame):
@@ -814,7 +788,7 @@ def _lloyd(emb: DataFrame):
     drift from the SQL oracle's unrolled iterations."""
     vecs = emb.select(
         "vec_id", F.expr(_QUANT_EXPR).alias("q")
-    ).localCheckpoint()
+    ).transform(barrier)
     k = _kmeans_k(vecs.count())
     cents = [
         (r["vec_id"], list(r["q"]))
@@ -913,7 +887,7 @@ def s_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     assigned = vecs.select(
         "vec_id", _assign_udf(cents)(F.col("q")).alias("cluster_id")
-    ).localCheckpoint()
+    ).transform(barrier)
     a, b = assigned.alias("a"), assigned.alias("b")
     cand = a.join(
         b,
@@ -995,7 +969,7 @@ def d_semantic_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     assigned = vecs.select(
         "vec_id", _assign_udf(cents)(F.col("q")).alias("cluster_id")
-    ).localCheckpoint()
+    ).transform(barrier)
     is_bench = F.col("vec_id") % SEM_CONTAM_MOD == 0
     bench = assigned.filter(is_bench).select(
         F.col("cluster_id"), F.col("vec_id").alias("bench_id")
@@ -1331,7 +1305,7 @@ def s_pq_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     vecs = emb.select(
         "vec_id", F.expr(_QUANT_EXPR).alias("fq")
-    ).localCheckpoint()
+    ).transform(barrier)
     # ALL subspaces ride one (m, vec_id, q) relation (narrow slice
     # explode off the shared checkpoint): r14 fused the PQ_M sequential
     # per-subspace loops — 8 driver collects + a 4-branch union whose

@@ -26,6 +26,7 @@ from conduit_spark.analytics import ordered_result
 from conduit_spark.analytics.dedup import SHINGLE_W, word_grams
 from conduit_spark.functions.hashing import md5_int32, sql_md5_int32
 from conduit_spark.sources.tables import load_table
+from conduit_spark.plans import barrier
 
 KMV_K = 64
 HASH_SPACE = float(2**32)  # md5_int32 range
@@ -378,7 +379,7 @@ def sk_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_doc = (
         docs.filter(n >= SHINGLE_W)
         .select("source", F.array_distinct(word_grams(SHINGLE_W)).alias("gs"))
-        .localCheckpoint()  # one scan feeds the filter AND the exact count
+        .transform(barrier)  # one scan feeds the filter AND the exact count
     )
     grams = per_doc.select("source", F.explode("gs").alias("gram"))
     seeds = F.array(*[F.lit(j) for j in range(BLOOM_K)])
@@ -504,7 +505,7 @@ def sk_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("token") != "")
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n_exact"))
-        .localCheckpoint()  # feeds both the sketch build and the probe
+        .transform(barrier)  # feeds both the sketch build and the probe
     )
     rows = F.explode(F.array(*[F.lit(r) for r in range(CMS_D)])).alias("r")
     keyed = counts.select(
@@ -580,7 +581,7 @@ def sk_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     byhash = (
         raw.groupBy("x")
         .agg(F.sort_array(F.collect_set("source")).alias("ss"))
-        .localCheckpoint()
+        .transform(barrier)
     )
     # two-phase k-min (the _kmv_sketch shape) over the re-exploded
     # (source, x) orientation — already distinct by construction; the
@@ -597,7 +598,7 @@ def sk_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_sort(F.flatten(F.collect_list("mins"))), 1, KMV_K
         ).alias("hs"),
         F.sum("cnt").alias("n"),
-    ).localCheckpoint(eager=False)  # tiny; read by both pair legs
+    ).transform(barrier, eager=False)  # tiny; read by both pair legs
     a, b = sk.alias("a"), sk.alias("b")
     pairs = a.join(b, F.col("a.source") < F.col("b.source")).select(
         F.col("a.source").alias("source_a"),
@@ -714,7 +715,7 @@ def sk_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("x"),
         )
         .distinct()
-    ).localCheckpoint()  # feeds both sketch paths AND the exact count
+    ).transform(barrier)  # feeds both sketch paths AND the exact count
     rest = F.expr(f"x div {HLL_M}")
     rho = F.instr(F.lpad(F.bin(rest), _REST_BITS, "0"), "1")
     rho_c = F.when(rho == 0, F.lit(_REST_BITS + 1)).otherwise(rho)

@@ -36,6 +36,7 @@ from conduit_spark.analytics import ordered_result
 from conduit_spark.analytics.dedup import word_grams
 from conduit_spark.analytics.text import STOPWORDS
 from conduit_spark.sources.tables import load_table
+from conduit_spark.plans import barrier
 
 # query-string parameter prefixes dropped by URL canonicalization
 TRACKING_PREFIXES = ("utm_", "fbclid=", "gclid=", "ref=")
@@ -186,7 +187,7 @@ def cur_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = (
         docs.filter(F.size(F.split(F.col("text"), " ")) >= BOILER_K)
         .select("doc_id", "source", hs.alias("hs"))
-        .localCheckpoint()  # not persist: checkpoint blocks are freed
+        .transform(barrier)  # not persist: checkpoint blocks are freed
         # when the DataFrame is GC'd, while the old persist() was never
         # unpersisted and accumulated cached partitions across the
         # gate+bench+scale_probe invocations of one session (ADVICE r7)

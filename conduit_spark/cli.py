@@ -1313,10 +1313,16 @@ def cmd_plan(args: argparse.Namespace) -> int:
     """Print a registered query's executed physical plan plus the
     scale-smell audit (conduit_spark.plans) — the pre-flight a query
     gets before running on a real cluster."""
+    import contextlib
     import json
 
     from conduit_spark import get_spark
-    from conduit_spark.plans import audit_plan, barriers_disabled, executed_plan
+    from conduit_spark.plans import (
+        audit_plan,
+        barrier_scope,
+        barriers_disabled,
+        executed_plan,
+    )
 
     import __spark_entry__ as entrymod
 
@@ -1332,17 +1338,14 @@ def cmd_plan(args: argparse.Namespace) -> int:
     # upstream DAG instead of post-checkpoint `Scan ExistingRDD`
     # fragments (the r7 judge's blind-audit finding); --as-executed
     # shows the production plan with its materialization barriers.
-    if args.as_executed:
+    mode = contextlib.nullcontext() if args.as_executed else barriers_disabled()
+    with barrier_scope(), mode:
         df = queries[args.query](spark, args.sf_dir)
-    else:
-        with barriers_disabled():
-            df = queries[args.query](spark, args.sf_dir)
-    audit = audit_plan(df, query=args.query)
-    if args.json:
-        print(json.dumps({"query": args.query, **audit}, indent=2))
-    else:
-        print(executed_plan(df))
-        print(json.dumps({"query": args.query, **audit}, indent=2))
+        audit = audit_plan(df, query=args.query)
+        plan = executed_plan(df)
+    if not args.json:
+        print(plan)
+    print(json.dumps({"query": args.query, **audit}, indent=2))
     return 2 if audit["smells"] else 0
 
 
@@ -1356,7 +1359,7 @@ def cmd_audit(args: argparse.Namespace) -> int:
     import contextlib
 
     from conduit_spark import get_spark
-    from conduit_spark.plans import audit_plan, barriers_disabled
+    from conduit_spark.plans import audit_plan, barrier_scope, barriers_disabled
 
     import __spark_entry__ as entrymod
 
@@ -1365,9 +1368,9 @@ def cmd_audit(args: argparse.Namespace) -> int:
     spark.sparkContext.setLogLevel("ERROR")
     bad = 0
     for name in sorted(queries):
-        ctx = contextlib.nullcontext() if args.as_executed else barriers_disabled()
+        mode = contextlib.nullcontext() if args.as_executed else barriers_disabled()
         try:
-            with ctx:
+            with barrier_scope(), mode:
                 audit = audit_plan(queries[name](spark, args.sf_dir), query=name)
         except Exception as exc:  # noqa: BLE001 — report, keep auditing
             print(json.dumps({"query": name, "error": str(exc)[:200]}))

@@ -1,7 +1,26 @@
-"""Physical-plan audit: the scale-smell report behind ``cli plan``
-and the fleet-wide ``cli audit``.
+"""Materialization barriers and the physical-plan audit behind
+``cli plan`` and the fleet-wide ``cli audit``.
 
-The engine's 100 TB posture is enforced twice: statically by
+**Materialization.** Every decision to pin an intermediate relation
+goes through this module, with one function per lifetime:
+
+- :func:`barrier` — query-scoped ``localCheckpoint``. Its blocks live
+  until the enclosing :func:`barrier_scope` exits (on success or
+  exception); a barrier created outside any scope is left to Spark's
+  ContextCleaner, so query functions stay lazy and callers that run
+  one query at a time decide when its blocks go.
+- :func:`session_materialize` (and :func:`session_dir` for file
+  fixtures) — a relation computed once per Spark application and
+  ``sf_dir`` and re-read from temp parquet by every later query. All
+  entries live under one per-process temp root removed at interpreter
+  exit.
+
+Plan audits build queries inside :func:`barriers_disabled`, where
+:func:`barrier` returns its input unchanged (``loop=True`` excepted)
+and :func:`session_materialize` inlines its build, so the audit sees
+the full upstream DAG instead of ``Scan ExistingRDD`` fragments.
+
+**Audit.** The engine's 100 TB posture is enforced twice: statically by
 tests/test_plan_shapes.py, and operationally by
 ``python -m conduit_spark plan <query>`` / ``audit`` which print the
 executed plan plus the audit below — the checklist a reviewer walks
@@ -25,101 +44,154 @@ the audit exit code stays meaningful as a CI gate.
 
 from __future__ import annotations
 
+import atexit
 import contextlib
 import os
 import re
+import shutil
+import tempfile
+from contextvars import ContextVar
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 SMELL_GLOBAL_WINDOW = "global-window"
 
-# --- audit barrier control (VERDICT r7 item 1) ------------------------
-#
-# ``localCheckpoint`` replaces the upstream DAG with ``Scan
-# ExistingRDD`` in the executed plan, so a plan audit taken on a
-# checkpointed query sees only the post-checkpoint fragment — the r7
-# judge verified ``plan s_semantic_dedup`` reported ``joins: []`` for a
-# query with two joins. The audit must therefore build its DataFrame
-# with barriers DISABLED: ``barriers_disabled()`` monkey-patches
-# ``DataFrame.localCheckpoint`` to the identity for the duration of
-# query construction, which covers every call site (including
-# ``ordered_result`` and future code) without threading a flag through
-# 35 helpers. It also sets ``CONDUIT_AUDIT_NO_BARRIER=1`` so
-# non-checkpoint materialization helpers (``_materialized_fixture``'s
-# temp-parquet write) inline their build plan instead.
-#
-# The one legitimate exception is ``iteration_barrier``: convergence
-# loops (connected components, PageRank, MMR, BPE-train) reference the
-# previous round's relation more than once, so without truncation the
-# unrolled lineage DOUBLES per round — the audit would hang in Catalyst
-# analysis long before printing a plan. Those sites keep a real
-# checkpoint even under audit; what the audit sees is one round's shape
-# plus the full (un-checkpointed) loop INPUT, which is the honest unit
-# of review for an iterative algorithm.
-
-AUDIT_NO_BARRIER_ENV = "CONDUIT_AUDIT_NO_BARRIER"
+# Context-local, not process-global: the gateway runs pipelines on
+# threads that share one SparkContext, and one thread's audit or scope
+# must never change what another thread's barriers do.
+_AUDIT: ContextVar[bool] = ContextVar("conduit_plan_audit", default=False)
+_SCOPE: ContextVar[list | None] = ContextVar("conduit_barrier_scope", default=None)
 
 
-def _df_classes() -> list[type]:
-    """Every DataFrame class that DEFINES localCheckpoint. PySpark 4
-    instances are ``pyspark.sql.classic.dataframe.DataFrame`` (which
-    overrides the abstract base), so patching only ``pyspark.sql
-    .DataFrame`` would be a silent no-op on real instances."""
-    classes: list[type] = [DataFrame]
-    try:  # the concrete class behind local-JVM sessions
-        from pyspark.sql.classic.dataframe import DataFrame as _ClassicDF
-
-        classes.append(_ClassicDF)
-    except ImportError:
-        pass
-    return [c for c in classes if "localCheckpoint" in c.__dict__]
+def _checkpoint_rdd(chk: DataFrame):
+    """The JVM RDD holding a ``localCheckpoint`` result's blocks (the
+    plan is a ``LogicalRDD`` over exactly the newly persisted RDD)."""
+    return chk._jdf.logicalPlan().rdd()
 
 
-# originals captured at import time, strictly before any patch
-_ORIGINALS: dict[type, object] = {c: c.localCheckpoint for c in _df_classes()}
+def barrier(df: DataFrame, eager: bool = True, loop: bool = False) -> DataFrame:
+    """``df.localCheckpoint(eager)``: cut lineage and pin the result in
+    executor-local blocks, so a relation read by several consumers is
+    computed once.
+
+    Inside :func:`barriers_disabled` this returns ``df`` unchanged,
+    unless ``loop=True``: in-loop state that the next round references
+    more than once (connected components, BPE merges) doubles its
+    unrolled plan per round without the cut, so those barriers stay
+    real under audit, and the audit sees one round's shape plus the
+    loop's full input.
+
+    Inside a :func:`barrier_scope` the checkpoint is registered with
+    that scope and freed when it exits."""
+    if _AUDIT.get() and not loop:
+        return df
+    chk = df.localCheckpoint(eager)
+    scope = _SCOPE.get()
+    if scope is not None:
+        scope.append(_checkpoint_rdd(chk))
+    return chk
 
 
-def barriers_suspended() -> bool:
-    """True while query construction should skip materialization
-    barriers (inside :func:`barriers_disabled`, or when the env flag is
-    set by an external harness)."""
-    return os.environ.get(AUDIT_NO_BARRIER_ENV, "") == "1"
+def stored_bytes(chk: DataFrame) -> int:
+    """Memory + disk bytes held by a :func:`barrier` result's blocks
+    (0 when nothing is stored yet); read from the block manager's
+    storage info, without running a job."""
+    rid = _checkpoint_rdd(chk).id()
+    infos = chk.sparkSession.sparkContext._jsc.sc().getRDDStorageInfo()
+    return sum(
+        int(ri.memSize()) + int(ri.diskSize()) for ri in infos if ri.id() == rid
+    )
 
 
-def iteration_barrier(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Lineage truncation that survives :func:`barriers_disabled`.
+@contextlib.contextmanager
+def barrier_scope():
+    """Free every :func:`barrier` created in this context when the
+    block exits, normally or by exception. Wrap one whole query —
+    construction AND execution: a DataFrame read after its scope exited
+    fails, because its checkpoint blocks are gone.
 
-    ONLY for in-loop state whose plan would otherwise double per
-    iteration; everything else must use plain ``localCheckpoint`` so
-    the audit can see through it.
-    """
-    for cls in type(df).__mro__:
-        if cls in _ORIGINALS:
-            return _ORIGINALS[cls](df, eager)
-    return df.localCheckpoint(eager)
+    Barriers are registered as they are created rather than found by
+    diffing ``getPersistentRDDs`` before and after, because a diff
+    would also free blocks that another thread's query persisted on
+    the shared SparkContext meanwhile."""
+    rdds: list = []
+    token = _SCOPE.set(rdds)
+    try:
+        yield
+    finally:
+        _SCOPE.reset(token)
+        for rdd in rdds:
+            rdd.unpersist(True)
 
 
 @contextlib.contextmanager
 def barriers_disabled():
-    """No-op every ``DataFrame.localCheckpoint`` (and signal fixture
-    helpers to inline their build) while building a query for audit."""
-
-    def _identity(self: DataFrame, eager: bool = True) -> DataFrame:
-        return self
-
-    for cls in _ORIGINALS:
-        cls.localCheckpoint = _identity
-    prev = os.environ.get(AUDIT_NO_BARRIER_ENV)
-    os.environ[AUDIT_NO_BARRIER_ENV] = "1"
+    """Plan-audit mode for queries built in this context: barriers are
+    the identity (``loop=True`` excepted) and session materializations
+    inline their build plan."""
+    token = _AUDIT.set(True)
     try:
         yield
     finally:
-        for cls, orig in _ORIGINALS.items():
-            cls.localCheckpoint = orig
-        if prev is None:
-            os.environ.pop(AUDIT_NO_BARRIER_ENV, None)
-        else:
-            os.environ[AUDIT_NO_BARRIER_ENV] = prev
+        _AUDIT.reset(token)
+
+
+_SESSION_ROOT: str | None = None  # per-process temp root, made on first use
+_SESSION_DIRS: dict[tuple[str, str, str], str] = {}
+
+
+def _session_root() -> str:
+    global _SESSION_ROOT
+    if _SESSION_ROOT is None:
+        _SESSION_ROOT = tempfile.mkdtemp(prefix="conduit_session_")
+        atexit.register(shutil.rmtree, _SESSION_ROOT, True)
+    return _SESSION_ROOT
+
+
+def session_dir(name: str, spark: SparkSession, sf_dir: str, write) -> str:
+    """A directory filled once per (Spark application, ``name``,
+    ``sf_dir``) by ``write(path)`` and returned to every later caller.
+    For fixtures consumed as files (captures a source connector
+    reads); relations go through :func:`session_materialize`."""
+    key = (spark.sparkContext.applicationId, name, sf_dir)
+    path = _SESSION_DIRS.get(key)
+    if path is None:
+        path = os.path.join(
+            tempfile.mkdtemp(prefix=f"{name}_", dir=_session_root()), "data"
+        )
+        write(path)
+        _SESSION_DIRS[key] = path
+    return path
+
+
+def session_materialize(name: str, spark: SparkSession, sf_dir: str, build):
+    """The relation(s) ``build()`` returns — one DataFrame or a tuple of
+    two or more — computed once per (Spark application, ``name``,
+    ``sf_dir``), written to temp parquet and re-read by every call.
+
+    For state shared across queries (trained models, synthesized
+    fixtures, pair relations several queries consume): a parquet
+    re-read holds no checkpoint blocks, so each query's
+    :func:`barrier_scope` can free everything it created, the
+    materialization included. Deterministic builds make the re-read
+    rows identical to the inline plan's. Inside
+    :func:`barriers_disabled` the build is returned inline and the
+    cache is neither read nor filled."""
+    if _AUDIT.get():
+        return build()
+
+    def write(path: str) -> None:
+        built = build()
+        for i, part in enumerate(built if isinstance(built, tuple) else (built,)):
+            part.write.parquet(os.path.join(path, str(i)))
+
+    path = session_dir(name, spark, sf_dir, write)
+    parts = tuple(
+        spark.read.parquet(os.path.join(path, str(i)))
+        for i in range(len(os.listdir(path)))
+    )
+    return parts if len(parts) > 1 else parts[0]
+
 
 SMELL_CARTESIAN = "cartesian-product"
 SMELL_SINGLE_PARTITION = "single-partition-exchange"

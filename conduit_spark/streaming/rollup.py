@@ -31,6 +31,8 @@ from typing import Callable
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from conduit_spark.plans import barrier, barrier_scope
+
 WIN_COL = "win_start_us"  # partition column: window start in epoch micros
 
 # Upper bound on DISTINCT windows one micro-batch may touch. The merge
@@ -74,42 +76,43 @@ def merge_rollup_batch(
     filter on ``WIN_COL``), keeps their rows for (window, keys) not in
     the batch, and rewrites those partitions with batch rows winning —
     dynamic partition overwrite, so untouched windows are never
-    rewritten."""
+    rewritten. The batch's checkpoints are freed before returning."""
     from pyspark.errors import AnalysisException
 
-    batch_df = batch_df.localCheckpoint()  # small: changed windows only
-    wins_df = batch_df.select(WIN_COL).distinct()
-    wins = [
-        r[WIN_COL] for r in wins_df.limit(MAX_WINDOWS_PER_BATCH + 1).collect()
-    ]
-    if len(wins) > MAX_WINDOWS_PER_BATCH:
-        raise ValueError(
-            f"rollup micro-batch touches > {MAX_WINDOWS_PER_BATCH} distinct "
-            f"windows — a watermark-less backfill? Batch the replay or "
-            f"raise rollup.MAX_WINDOWS_PER_BATCH deliberately."
+    with barrier_scope():
+        batch_df = barrier(batch_df)  # small: changed windows only
+        wins_df = batch_df.select(WIN_COL).distinct()
+        wins = [
+            r[WIN_COL] for r in wins_df.limit(MAX_WINDOWS_PER_BATCH + 1).collect()
+        ]
+        if len(wins) > MAX_WINDOWS_PER_BATCH:
+            raise ValueError(
+                f"rollup micro-batch touches > {MAX_WINDOWS_PER_BATCH} distinct "
+                f"windows — a watermark-less backfill? Batch the replay or "
+                f"raise rollup.MAX_WINDOWS_PER_BATCH deliberately."
+            )
+        if not wins:
+            return
+        merged = batch_df
+        try:
+            existing = spark.read.parquet(target_path).filter(
+                F.col(WIN_COL).isin(wins)
+            )
+            keep = existing.join(
+                batch_df.select(WIN_COL, *keys), [WIN_COL, *keys], "left_anti"
+            )
+            # cut lineage to the target's files BEFORE overwriting them —
+            # a lazy self-read-then-overwrite would race its own input.
+            # Materialized size = the touched windows' rows only.
+            merged = barrier(keep.unionByName(batch_df))
+        except AnalysisException:  # first batch: target doesn't exist yet
+            pass
+        (
+            merged.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(WIN_COL)
+            .parquet(target_path)
         )
-    if not wins:
-        return
-    merged = batch_df
-    try:
-        existing = spark.read.parquet(target_path).filter(
-            F.col(WIN_COL).isin(wins)
-        )
-        keep = existing.join(
-            batch_df.select(WIN_COL, *keys), [WIN_COL, *keys], "left_anti"
-        )
-        # cut lineage to the target's files BEFORE overwriting them —
-        # a lazy self-read-then-overwrite would race its own input.
-        # Materialized size = the touched windows' rows only.
-        merged = keep.unionByName(batch_df).localCheckpoint()
-    except AnalysisException:  # first batch: target doesn't exist yet
-        pass
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(WIN_COL)
-        .parquet(target_path)
-    )
 
 
 def start_incremental_rollup(

@@ -8,6 +8,10 @@ multiset where int and float representations are NOT conflated —
 ``5`` != ``5.0``. This is deliberately stricter than
 ``tests/oracle_util.py``; a pass here should imply a driver hash match.
 
+Each query runs inside ``plans.barrier_scope()``; a query that leaves
+an RDD persisted after its scope exits (one that was not persisted
+before it started) fails with ``LEAK``.
+
 Usage: python scripts/gate_check.py [--sf /root/testdata/sf0.01] [names...]
 """
 
@@ -155,6 +159,12 @@ def check_one(spark, con, name, fn, sql, sf_dir, in_gate=True):
     return res
 
 
+def persisted_rdd_ids(spark) -> set[int]:
+    return {
+        int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
+    }
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -162,6 +172,7 @@ def main():
     args = ap.parse_args()
 
     import __spark_entry__ as entry_mod
+    from conduit_spark.plans import barrier_scope
     from conduit_spark.session import get_spark
 
     spark = get_spark()
@@ -186,13 +197,20 @@ def main():
             print(f"{name}: NOT IN queries()")
             n_bad += 1
             continue
+        persisted_before = persisted_rdd_ids(spark)
         try:
-            r = check_one(spark, con, name, queries[name], oracles.get(name),
-                          args.sf, in_gate=name in gate_names)
+            with barrier_scope():
+                r = check_one(spark, con, name, queries[name], oracles.get(name),
+                              args.sf, in_gate=name in gate_names)
         except Exception as e:  # noqa: BLE001
             print(f"{name}: ERROR {type(e).__name__}: {e}")
             n_bad += 1
             continue
+        leaked = sorted(persisted_rdd_ids(spark) - persisted_before)
+        if leaked:
+            r["status"] = "LEAK" if r["ok"] else r["status"] + "+LEAK"
+            r["detail"] = f"{r.get('detail', '')} persisted RDDs left: {leaked}"
+            r["ok"] = False
         flag = "" if r["ok"] else "  <<<<"
         print(f"{name}: {r['status']} rows={r.get('spark_rows')}"
               f" {r.get('detail','')}{flag}")
